@@ -39,25 +39,25 @@ import spans as tr_mod  # noqa: E402
 
 WORK_DIR = ".perfbench_work"
 # The pool is written and scanned by the oracle once per checkout (the first
-# run); a seed then picks CONVS of its conversations (~4,200 turns).
-# run_pipeline's wall at this size is mostly per-job and per-commit overhead;
-# one operation of each workload has to fit beside the session start inside
-# the run budget.
+# run); a seed then picks CONVS of its conversations (~4,200 turns). At this
+# size run_pipeline's first call in a fresh JVM is mostly per-job overhead and
+# JIT warm-up: on 4 cores it took 21 s here and 32 s at 16,000 conversations,
+# where a run would no longer fit the run budget (see README.md).
 POOL_CONVS = 1200
 CONVS = 500
 SMOKE_POOL_CONVS = 40
 SMOKE_CONVS = 12
-# resume_batched: 4 hash buckets, one bucket per unit batch, crash after 2
-N_BUCKETS = 4
+# resume_batched: 2 hash buckets, one bucket per unit batch, crash after 1
+N_BUCKETS = 2
+# appended to one row of the fallback probe's slice: a non-ASCII character
+# sends the whole batch from the columnar scan to the regex path
+NON_ASCII_WORD = "café"
 
 WORKLOADS = {
     # submit_pipeline's defaults: 8 buckets, one unit batch; then graph_stats
-    "build_ascii": {"mixed": False, "resume": False, "stats": True},
-    # 1% of turns carry a trailing non-ASCII word (per-row regex fallback);
-    # not in BENCHMARK.json (run budget), kept for the mixed-script check
-    "build_mixed": {"mixed": True, "resume": False, "stats": False},
+    "build_ascii": {"resume": False, "stats": True},
     # crash after half the unit batches, resume, re-run with all units done
-    "resume_batched": {"mixed": False, "resume": True, "stats": False},
+    "resume_batched": {"resume": True, "stats": False},
 }
 
 E2E = {  # name -> unit
@@ -141,13 +141,11 @@ class Bench:
         self.spark = get_spark(app_name="perfbench", extra_conf=extra)
         self.session_start_s = time.perf_counter() - t1
         self.onto = build_ontology(n_terms=prep.N_TERMS)
-        mixed = self.cfg["mixed"]
-        data = os.path.join(self.cdir, "mixed" if mixed else "ascii")
-        with open(os.path.join(self.cdir, "oracle_mixed.json" if mixed else "oracle.json")) as f:
+        with open(os.path.join(self.cdir, "oracle.json")) as f:
             self.expect = json.load(f)
-        self.data = data
-        self.in_bytes = du(data)
-        self.tr = self.spark.read.parquet(data)
+        self.data = os.path.join(self.cdir, "ascii")
+        self.in_bytes = du(self.data)
+        self.tr = self.spark.read.parquet(self.data)
         # warm-up: every scan task starts a Python worker and builds its
         # matcher; the first two turns of each conversation keep it short
         extract_mentions(self.tr.filter(F.col("turn_idx") < 2), self.onto) \
@@ -255,7 +253,8 @@ class Bench:
             if sorted(res.units_skipped) != list(range(N_BUCKETS)) or res.units_processed:
                 self.fail(f"rerun processed {res.units_processed}")
             self.check_edges(res, "rerun leg")
-        m["build_s"] = m["crash_leg_s"] + m["resume_s"]
+        # the whole cycle is one operation for the user: crash, resume, re-run
+        m["build_s"] = m["crash_leg_s"] + m["resume_s"] + m["rerun_s"]
         return self.finish(out, m)
 
     def crash_leg(self, out: str) -> float:
@@ -351,12 +350,18 @@ class Bench:
         p["dictionary.build_s"] = time.perf_counter() - t
 
         # a fixed 10k-turn slice: the ASCII corpus's texts, repeated
-        texts = [r[2] or "" for r in prep.read_rows(os.path.join(self.cdir, "ascii"))]
+        texts = [r[2] or "" for r in prep.read_rows(self.data)]
         slice_ = (texts * (10_000 // max(len(texts), 1) + 1))[:10_000]
         p["dictionary.columnar_rows_per_s"] = rate(
             lambda: matcher.find_batch_columnar(slice_, need_surface=True), 10_000)
-        p["dictionary.fallback_rows_per_s"] = rate(
-            lambda: matcher.find_batch(slice_), 10_000)
+        # the same slice with one non-ASCII row takes the regex path whole
+        mixed = [f"{slice_[0]} {NON_ASCII_WORD}", *slice_[1:]]
+        assert matcher.find_batch_columnar(mixed) is None, \
+            "the columnar scan took non-ASCII text; the fallback probe needs other input"
+        self.attempted += 1
+        if matcher.find_batch(mixed) != matcher.find_batch(slice_):
+            self.fail("dictionary: the regex path and the columnar scan disagree")
+        p["dictionary.fallback_rows_per_s"] = rate(lambda: matcher.find_batch(mixed), 10_000)
         # share of the workload corpus's Arrow batches (one per file here,
         # 10k rows at most) that leave the columnar scan
         batches = fell_back = 0
@@ -492,8 +497,6 @@ def main(argv: list[str] | None = None) -> int:
             cwd=work, check=True, stdout=sys.stderr,
         )
     cdir = prep.write_corpus(work, pool, args.seed, convs)
-    if WORKLOADS[args.workload]["mixed"]:
-        prep.write_mixed(cdir)
     prepare_s = time.perf_counter() - t
     prep.spark_env(root, work)
 
@@ -541,8 +544,7 @@ def main(argv: list[str] | None = None) -> int:
     summary["peak_rss_mb"] = rss
     summary["failed_frac"] = b.failed / max(b.attempted, 1)
     record = {"workload": args.workload, "seed": args.seed, "iterations": len(iters),
-              "prepare_s": prepare_s, "mixed_turns": b.expect.get("mixed_turns", 0),
-              "oracle_triples": b.expect["triples"], **versions(root, java)}
+              "prepare_s": prepare_s, "oracle_triples": b.expect["triples"], **versions(root, java)}
     print("perfbench: " + json.dumps(record), file=sys.stderr)
     with open(os.path.join(work, "results.jsonl"), "a") as f:
         f.write(json.dumps({**record, "trace": args.trace, "failed": b.failed,
