@@ -69,14 +69,6 @@ class Ontology:
                 out.append((s, t["id"], 0.9))
         return out
 
-    def prefix_maps(self) -> tuple[dict[str, str], dict[str, str]]:
-        """(curie_prefix -> iri_prefix, iri_prefix -> curie_prefix) including
-        lowercased CURIE-prefix variants (transform.py:760-761)."""
-        c2i = dict(IRI_PREFIX)
-        c2i.update({p.lower(): iri for p, iri in IRI_PREFIX.items()})
-        i2c = {iri: p for p, iri in IRI_PREFIX.items()}
-        return c2i, i2c
-
 
 def _label(rng: random.Random, used: set[str]) -> str:
     for n_adj in (1, 2, 3):  # widen when 2-word space exhausts (big dictionaries)

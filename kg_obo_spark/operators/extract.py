@@ -25,7 +25,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -346,12 +346,17 @@ def extract_turn_ranks(
     )
 
 
+def empty_or_null_text() -> Column:
+    """The turns the scan cannot take: null or whitespace-only ``text``."""
+    return F.col("text").isNull() | (F.length(F.trim(F.col("text"))) == 0)
+
+
 def split_valid_turns(transcripts: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(valid, errors): rows with null/empty text are diverted to an error
     frame instead of crashing the scan — the A8 error-count aggregation
     (reference counts log errors per category, transform.py:160-167; here the
     error frame is counted into the lineage table's metrics)."""
-    bad = F.col("text").isNull() | (F.length(F.trim(F.col("text"))) == 0)
+    bad = empty_or_null_text()
     errors = transcripts.filter(bad).select(
         "conv_id", "turn_idx", F.lit("empty_or_null_text").alias("error")
     )

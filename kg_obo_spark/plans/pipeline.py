@@ -20,6 +20,12 @@ Scale notes: units are hash buckets of conv_id, so resume granularity is
 independent of conversation count; all per-unit stages are conv-local (no
 cross-bucket shuffle); only the finalize stage sees global state (distinct node
 ids — tiny relative to input).
+
+Spark jobs touch the corpus only. Lineage and tracking rows are driver-held
+and tiny by design, so they are written from the driver (plans/tracking.py;
+the analog of Iceberg appending a small data file from the driver); batch
+counts are one aggregate job, per-partition lineage comes from the mentions
+commit's parquet footers, and the canonical map is a driver-side union-find.
 """
 
 from __future__ import annotations
@@ -33,11 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kg_obo_spark.datagen.ontology import Ontology
-from kg_obo_spark.operators.canonicalize import canonical_map
+from kg_obo_spark.dictionary import MAX_DEGRADATION_LEVEL, get_matcher
+from kg_obo_spark.operators.canonicalize import canonical_map, union_find
 from kg_obo_spark.operators.extract import (
     EXTRACTION_BUDGET_MARKER,
+    empty_or_null_text,
     extract_mentions,
-    split_valid_turns,
 )
 from kg_obo_spark.operators.materialize import (
     VOCAB_INT_CROSSOVER_TURNS,
@@ -47,7 +54,7 @@ from kg_obo_spark.operators.materialize import (
     canonical_mentions,
     co_edges_from_mention_ranks,
 )
-from kg_obo_spark.plans.tracking import TrackingStore, partition_metrics
+from kg_obo_spark.plans.tracking import TrackingStore, partition_rows_from_footers
 from kg_obo_spark.sources.tableio import Lock, Table
 
 
@@ -116,12 +123,8 @@ def run_pipeline(
         )
         skipped = sorted(set(all_units) - set(pending))
 
-        # canonicalization map: tiny, computed once, broadcast into every join
-        eq = spark.createDataFrame(
-            onto.xrefs or [("__none__", "__none__")], "a string, b string"
-        )
-        terms_df = spark.createDataFrame([(t["id"],) for t in onto.terms], "id string")
-        cmap = canonical_map(terms_df, eq)
+        # canonicalization map: driver-side union-find, broadcast into joins
+        cmap = canonical_map(None, onto.xrefs)
 
         # Persist the batching geometry (ADVICE r3): unit_tag encodes the batch
         # composition, so a resume after a crash-window crash MUST chunk the
@@ -139,8 +142,6 @@ def run_pipeline(
         batch = unit_batch_size or max(len(pending), 1)
         batches = [pending[i : i + batch] for i in range(0, len(pending), batch)]
         done_batches = 0
-        from kg_obo_spark.dictionary import MAX_DEGRADATION_LEVEL
-
         ladder_top = (
             MAX_DEGRADATION_LEVEL
             if max_degradation_level is None
@@ -149,9 +150,9 @@ def run_pipeline(
         rank_cu = None  # lazily-built canonical rank table (ROADMAP #13)
         for units in batches:
             sub = tr.filter(F.col("bucket").isin(units))
-            valid, errors = split_valid_turns(sub)
-            n_err = errors.count()
-            n_in = sub.count()
+            bad = empty_or_null_text()
+            valid = sub.filter(~bad)
+            n_in, n_err = sub.agg(F.count("*"), F.count_if(bad)).first()
             if n_err:
                 store.log_stage(
                     spark, run_id, "input_errors", rows_in=n_in, rows_out=n_err
@@ -200,7 +201,8 @@ def run_pipeline(
                 # O(1) marker-file lookup, not an O(total commits) history scan
                 # (VERDICT r3 missing #3)
                 snap_m = mentions_t.snapshot_by_tag(unit_tag)
-            batch_mentions = spark.read.parquet(json.loads(snap_m.data_dir)[-1])
+            batch_dir = json.loads(snap_m.data_dir)[-1]
+            batch_mentions = spark.read.parquet(batch_dir)
             use_ranks = (
                 int_rank_edges
                 if int_rank_edges is not None
@@ -209,18 +211,12 @@ def run_pipeline(
             if use_ranks:
                 if rank_cu is None:
                     # canonical rank table, built once per run: canon dict
-                    # from the (tiny, by design) cmap frame, term universe
-                    # from the full-level matcher — a superset of every
-                    # degraded level's ids, so the re-rank join below is
+                    # from the driver-side union-find, term universe from the
+                    # full-level matcher — a superset of every degraded
+                    # level's ids, so the re-rank join below is
                     # row-preserving for any committed batch
-                    from kg_obo_spark.dictionary import get_matcher
-
-                    canon_dict = {
-                        r["term_id"]: r["canonical_id"] for r in cmap.collect()
-                    }
-                    rank_cu = get_matcher(onto, 0).canon_rank_table(
-                        canon_dict
-                    )[1]
+                    canon = union_find(onto.xrefs)
+                    rank_cu = get_matcher(onto, 0).canon_rank_table(canon)[1]
                 co = co_edges_from_mention_ranks(batch_mentions, rank_cu, onto)
             else:
                 co = build_edges(batch_mentions, onto, include_isa=False)
@@ -236,7 +232,7 @@ def run_pipeline(
                 rows_in=n_in,
                 rows_out=snap_m.meta["batch_rows"],
                 snapshot_id=snap_m.snapshot_id,
-                per_partition=partition_metrics(batch_mentions),
+                partition_rows=partition_rows_from_footers(batch_dir),
             )
             store.log_stage(
                 spark,

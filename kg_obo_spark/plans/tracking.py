@@ -12,17 +12,27 @@ Semantics mirrored from the reference's tracking.yaml + lock + mapcount trio:
 - ``lineage(stage, partition_id, rows_in, rows_out, ...)`` per-partition metrics
   — the distributed analog of the reference's remap-hit counter reporting
   (transform.py:626,661-664), committed with each stage snapshot.
+
+Both tables are written from the driver as ``pyarrow.Table`` commits (and
+``track_version`` reads tracking with pyarrow): the rows are driver-held and
+tiny by design, one per stage, unit or ontology, so the writers launch no
+Spark job — the analog of Iceberg appending a small data file from the driver.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
-from kg_obo_spark.sources.tableio import Table
+from kg_obo_spark.sources.tableio import Table, parquet_part_rows
 
 TRACKING_SCHEMA = (
     "source string, current_iri string, current_version string, "
@@ -32,6 +42,13 @@ LINEAGE_SCHEMA = (
     "run_id string, stage string, partition_id int, rows_in long, rows_out long, "
     "remap_count long, snapshot_id string, committed_at timestamp"
 )
+
+
+def _arrow_rows(rows: list[tuple], ddl: str) -> pa.Table:
+    """Driver-held rows as Arrow with the Spark DDL's schema (``timestamp`` ->
+    ``timestamp[us, tz=UTC]``, which Spark reads back as ``timestamp``)."""
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    return pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
 
 
 class TrackingStore:
@@ -50,39 +67,33 @@ class TrackingStore:
 
     def transformed_exists(self, spark: SparkSession, source: str, version: str) -> bool:
         """True iff (source, version) is the current version or archived —
-        transform.py:411-452 semantics."""
-        t = self.read_tracking(spark).filter(F.col("source") == source)
-        row = t.select(
-            F.max((F.col("current_version") == version).cast("int")).alias("cur"),
-            F.max(
-                F.exists("archive", lambda a: a["version"] == F.lit(version)).cast("int")
-            ).alias("arch"),
-        ).first()
-        return bool(row and ((row["cur"] or 0) + (row["arch"] or 0) > 0))
+        transform.py:411-452 semantics. Read on the driver: no Spark job."""
+        return any(
+            r["current_version"] == version
+            or any(a["version"] == version for a in r["archive"] or [])
+            for r in self._tracking_rows()
+            if r["source"] == source
+        )
+
+    def _tracking_rows(self) -> list[dict]:
+        head = self.tracking.latest()
+        dirs = json.loads(head.data_dir) if head else []
+        return [r for d in dirs for r in pq.read_table(d).to_pylist()]
 
     def track_version(
         self, spark: SparkSession, source: str, iri: str, version: str
     ) -> None:
         """Rotate current into archive and install the new version
-        (transform.py:381-395)."""
-        cur = self.read_tracking(spark)
-        mine = cur.filter(F.col("source") == source)
-        others = cur.filter(F.col("source") != source)
-        row = mine.first()
-        if row is None:
-            archive = []
-        else:
-            archive = [a.asDict() for a in (row["archive"] or [])]
-            if row["current_version"] is not None and row["current_version"] != "NA":
-                if row["current_version"] != version:
-                    archive.append(
-                        {"iri": row["current_iri"], "version": row["current_version"]}
-                    )
-        new_row = spark.createDataFrame(
-            [(source, iri, version, [(a["iri"], a["version"]) for a in archive])],
-            TRACKING_SCHEMA,
-        )
-        self.tracking.commit(others.unionByName(new_row), meta={"source": source})
+        (transform.py:381-395), on the driver: no Spark job."""
+        cur = self._tracking_rows()
+        row = next((r for r in cur if r["source"] == source), None)
+        archive = list(row["archive"] or []) if row else []
+        if row and row["current_version"] not in (None, "NA", version):
+            archive.append({"iri": row["current_iri"], "version": row["current_version"]})
+        # every writer of this table stores TRACKING_SCHEMA's column order
+        rows = [tuple(r.values()) for r in cur if r["source"] != source]
+        rows.append((source, iri, version, archive))
+        self.tracking.commit(_arrow_rows(rows, TRACKING_SCHEMA), meta={"source": source})
 
     # ------------------------------------------------------------ resume
 
@@ -105,19 +116,15 @@ class TrackingStore:
     ) -> None:
         """Record a whole unit batch in ONE lineage commit — one write job and
         one snapshot per batch instead of per unit (VERDICT r2 missing #2:
-        per-unit commits made resume bookkeeping O(units) snapshots)."""
+        per-unit commits made resume bookkeeping O(units) snapshots). Written
+        from the driver: no Spark job."""
         if not units:
             return
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        now = datetime.now(timezone.utc)
         rows = [(run_id, "unit_done", -1, 0, 0, 0, u, now) for u in units]
         self.lineage.commit(
-            spark.createDataFrame(rows, LINEAGE_SCHEMA),
-            mode="append",
-            meta={"units": units},
+            _arrow_rows(rows, LINEAGE_SCHEMA), mode="append", meta={"units": units}
         )
-
-    def mark_unit_done(self, spark: SparkSession, run_id: str, unit: str) -> None:
-        self.mark_units_done(spark, run_id, [unit])
 
     # ------------------------------------------------------------ lineage
 
@@ -130,34 +137,27 @@ class TrackingStore:
         rows_out: int,
         remap_count: int = 0,
         snapshot_id: str = "",
-        per_partition: DataFrame | None = None,
+        partition_rows: dict[int, int] | None = None,
     ) -> None:
-        """Append stage metrics; ``per_partition`` may carry per-partition rows
-        (partition_id, rows_in, rows_out) computed via spark_partition_id()."""
-        now = datetime.now(timezone.utc).replace(tzinfo=None)
+        """Append one stage-metrics row from the driver (no Spark job), plus
+        one per ``partition_rows`` entry (partition_id -> rows_out), whose
+        ``rows_in`` is null: it is not measured per partition."""
+        now = datetime.now(timezone.utc)
         rows = [(run_id, stage, -1, rows_in, rows_out, remap_count, snapshot_id, now)]
-        df = spark.createDataFrame(rows, LINEAGE_SCHEMA)
-        if per_partition is not None:
-            pp = per_partition.select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id").cast("int"),
-                F.col("rows_in").cast("long"),
-                F.col("rows_out").cast("long"),
-                F.lit(0).cast("long").alias("remap_count"),
-                F.lit(snapshot_id).alias("snapshot_id"),
-                F.lit(now).alias("committed_at"),
-            )
-            df = df.unionByName(pp)
-        self.lineage.commit(df, mode="append", meta={"stage": stage})
+        rows += [
+            (run_id, stage, pid, None, n, 0, snapshot_id, now)
+            for pid, n in sorted((partition_rows or {}).items())
+        ]
+        self.lineage.commit(
+            _arrow_rows(rows, LINEAGE_SCHEMA), mode="append", meta={"stage": stage}
+        )
 
 
-def partition_metrics(df: DataFrame) -> DataFrame:
-    """(partition_id, rows_in, rows_out) for a frame — rows_in == rows_out here;
-    stages that filter report both sides."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count("*").alias("rows_out"))
-        .withColumn("rows_in", F.col("rows_out"))
-    )
+def partition_rows_from_footers(data_dir: str) -> dict[int, int]:
+    """partition_id -> rows for a Spark-written data dir, from the
+    ``part-NNNNN`` file names and the parquet footers (no scan, no job)."""
+    out: dict[int, int] = {}
+    for path, n in parquet_part_rows(data_dir).items():
+        pid = int(os.path.basename(path).split("-")[1])
+        out[pid] = out.get(pid, 0) + n
+    return out

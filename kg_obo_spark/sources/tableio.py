@@ -29,6 +29,11 @@ Append-mode manifests accumulate one data dir per commit; ``compact()``
 rewrites them into one dir so the manifest and the reader's path list stay
 bounded (Iceberg's rewrite_data_files).
 
+Driver-side writes: ``commit`` also takes a ``pyarrow.Table``, which is how
+the lineage and tracking tables are written (plans/tracking.py): their rows
+are driver-held and tiny by design, so a Spark job would only wrap one small
+file — the analog of Iceberg appending a small data file from the driver.
+
 On a real cluster this module is replaced by an Iceberg catalog: commit ->
 ``writeTo(t).createOrReplace()``/append, lock -> optimistic commit conflict,
 snapshots -> Iceberg metadata tables.
@@ -36,13 +41,27 @@ snapshots -> Iceberg metadata tables.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
+from functools import reduce
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    ArrayType,
+    DecimalType,
+    MapType,
+    StructType,
+    _parse_datatype_string,
+)
 
 
 class LockHeldError(RuntimeError):
@@ -54,18 +73,18 @@ class CommitConflictError(RuntimeError):
     (Iceberg's validation failure on rewrite conflicts). Recompute and retry."""
 
 
-def _parquet_row_count(data_dir: str) -> int:
-    """Sum row counts from parquet footers under ``data_dir`` (recursing into
-    hive partition dirs) — the Iceberg manifest-stats analog: row counts come
-    from metadata the write already produced, not a second scan of the data."""
-    import pyarrow.parquet as pq
-
-    total = 0
-    for base, _dirs, files in os.walk(data_dir):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                total += pq.read_metadata(os.path.join(base, fn)).num_rows
-    return total
+def parquet_part_rows(data_dir: str) -> dict[str, int]:
+    """Row count of every parquet file under ``data_dir`` (recursing into hive
+    partition dirs), keyed by file path, from the footers — the Iceberg
+    manifest-stats analog: counts come from metadata the write already
+    produced, not a second scan of the data."""
+    paths = (
+        os.path.join(base, fn)
+        for base, _dirs, files in os.walk(data_dir)
+        for fn in files
+        if fn.endswith(".parquet")
+    )
+    return {p: pq.read_metadata(p).num_rows for p in paths}
 
 
 @dataclass
@@ -184,7 +203,7 @@ class Table:
 
     def commit(
         self,
-        df: DataFrame,
+        df: DataFrame | pa.Table,
         meta: dict | None = None,
         mode: str = "overwrite",
         if_absent_tag: str | None = None,
@@ -203,7 +222,13 @@ class Table:
         analog; see test_tableio.py::test_partitioned_commit_prunes).
         ``write_options``: extra parquet writer options (e.g. per-column
         bloom filters: ``parquet.bloom.filter.enabled#id``) — the Iceberg
-        write-properties analog."""
+        write-properties analog.
+        A ``pyarrow.Table`` is written from the driver as one parquet file (no
+        Spark job, no ``partition_by``/``write_options``); its recorded schema
+        is the Spark string of its Arrow schema, as a Spark write would record."""
+        arrow = isinstance(df, pa.Table)
+        if arrow and (partition_by or write_options):
+            raise ValueError("a pyarrow.Table commit takes no partition_by/write_options")
         base_meta = dict(meta or {})
         if if_absent_tag is not None:
             if self.has_tag(if_absent_tag):
@@ -213,16 +238,19 @@ class Table:
             base_meta["partition_by"] = partition_by
         snap_id = uuid.uuid4().hex[:16]
         data_dir = os.path.join(self.root, f"data-{snap_id}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        if write_options:
-            writer = writer.options(**write_options)
-        writer.parquet(data_dir)
-        # row count from parquet footers — metadata-only, never a second scan
-        # of the data just written (the old read().count() re-read everything)
-        n = _parquet_row_count(data_dir)
-        schema_str = df.schema.simpleString()
+        if arrow:
+            os.makedirs(data_dir)
+            pq.write_table(df, os.path.join(data_dir, f"part-00000-{snap_id}.parquet"))
+        else:
+            writer = df.write.mode("overwrite")
+            if partition_by:
+                writer = writer.partitionBy(*partition_by)
+            if write_options:
+                writer = writer.options(**write_options)
+            writer.parquet(data_dir)
+        schema_str = (from_arrow_schema(df.schema) if arrow else df.schema).simpleString()
+        # row count from the footers, never a second scan of the data
+        n = sum(parquet_part_rows(data_dir).values())
 
         # optimistic concurrency (Iceberg's commit conflict): the metadata
         # build races other writers, so claim the next sequence number with an
@@ -259,13 +287,11 @@ class Table:
                 # behind it is a crashed claimer — reap it (the claimer writes
                 # metadata immediately after claiming; its data was already
                 # durable before the claim).
-                import glob as _glob
-
                 try:
                     stale = (time.time() - os.path.getmtime(marker)) > 60
                 except FileNotFoundError:
                     continue
-                if stale and not _glob.glob(
+                if stale and not glob.glob(
                     os.path.join(self._snap_dir, f"{seq:012d}-*.json")
                 ):
                     try:
@@ -275,9 +301,7 @@ class Table:
                 else:
                     time.sleep(0.02)
                 continue
-            import glob as _glob
-
-            if _glob.glob(os.path.join(self._snap_dir, f"{seq:012d}-*.json")):
+            if glob.glob(os.path.join(self._snap_dir, f"{seq:012d}-*.json")):
                 # we claimed a reaped marker but a manifest already exists at
                 # this sequence: the previous owner is mid-commit (its LATEST
                 # rename is imminent, or it will clean up after being fenced).
@@ -390,14 +414,9 @@ class Table:
         # type-widening append (int -> long on the same column) unions cleanly
         # instead of failing on the union's type check (the Iceberg rule:
         # the table schema is the newest commit's schema).
-        from functools import reduce
-
         frames = [reader.parquet(d) for d in dirs]
         target = snap.meta.get("schema")
         if target:
-            from pyspark.sql import functions as F
-            from pyspark.sql.types import _parse_datatype_string
-
             # Iceberg's rule permits only WIDENING promotions (int->long,
             # float->double, decimal precision growth at fixed scale; spec
             # "Schema Evolution") — recursively, so array<int> -> array<long>
@@ -406,13 +425,6 @@ class Table:
             # widenings). A narrowing cast under Spark's non-ANSI default
             # silently overflows instead of failing (ADVICE r5 low), so
             # anything non-widening is a hard error here.
-            from pyspark.sql.types import (
-                ArrayType,
-                DecimalType,
-                MapType,
-                StructType,
-            )
-
             widening = {
                 "byte": {"short", "integer", "long"},
                 "short": {"integer", "long"},
@@ -497,12 +509,10 @@ class Table:
                 if not survivors or seq < survivors[0].sequence:
                     os.remove(full)
         removed_d = 0
-        import shutil as _shutil
-
         for fn in os.listdir(self.root):
             full = os.path.join(self.root, fn)
             if fn.startswith("data-") and os.path.isdir(full) and full not in live_dirs:
-                _shutil.rmtree(full)
+                shutil.rmtree(full)
                 removed_d += 1
         return {"manifests_removed": removed_m, "data_dirs_removed": removed_d}
 

@@ -104,9 +104,9 @@ def read_assignment(
     base = spark.read.parquet(dirs[0]).select("id", "component", "_epoch")
     if len(dirs) == 1:
         return base.select("id", "component")
-    from kg_obo_spark.sources.tableio import _parquet_row_count
+    from kg_obo_spark.sources.tableio import parquet_part_rows
 
-    tail_rows = sum(_parquet_row_count(d) for d in dirs[1:])
+    tail_rows = sum(sum(parquet_part_rows(d).values()) for d in dirs[1:])
     if tail_rows > broadcast_tail_rows:
         # latest-epoch-wins as an aggregate, not a window: max_by partial-
         # aggregates map-side, so the resolve shuffle carries one row per id

@@ -84,8 +84,14 @@ def test_lineage_and_tracking_written(spark, onto, transcripts, tmp_path):
     lin = store.lineage.read(spark)
     stages = {r["stage"] for r in lin.select("stage").distinct().collect()}
     assert {"extract+link", "co_edges", "materialize_nodes", "materialize_edges", "unit_done"} <= stages
-    # per-partition metrics rows exist
+    # per-partition metrics rows exist, and (taken from the mentions commit's
+    # parquet footers) they add up to the stage's own rows_out
     assert lin.filter(F.col("partition_id") >= 0).count() > 0
+    link = lin.filter(F.col("stage") == "extract+link")
+    total = link.filter(F.col("partition_id") == -1).first()["rows_out"]
+    parts = link.filter(F.col("partition_id") >= 0)
+    assert parts.agg(F.sum("rows_out")).first()[0] == total
+    assert parts.filter(F.col("rows_in").isNotNull()).count() == 0
     # tracking rotation recorded the ontology version
     t = store.read_tracking(spark).filter(F.col("source") == onto.name).first()
     assert t["current_version"] == onto.version

@@ -4,6 +4,8 @@ snapshot time-travel, lock mutex, tracking rotation."""
 import glob
 import json
 import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
@@ -536,3 +538,120 @@ def test_type_narrowing_across_append_chain_raises(spark):
     )
     with pytest.raises(ValueError, match="narrow"):
         t.read(spark).collect()
+
+
+# ------------------------------------------------- driver-side (Arrow) commits
+
+
+@contextmanager
+def _jobs_in_group(spark):
+    """Collect the ids of the Spark jobs started inside the block."""
+    sc = spark.sparkContext
+    gid = uuid.uuid4().hex
+    sc.setJobGroup(gid, "job count probe")
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_bookkeeping_launches_no_spark_jobs(spark, tmp_path):
+    store = TrackingStore(str(tmp_path))
+    with _jobs_in_group(spark) as jobs:
+        store.log_stage(
+            spark, "r1", "extract+link", 10, 20, snapshot_id="s",
+            partition_rows={0: 12, 1: 8},
+        )
+        store.mark_units_done(spark, "r1", ["0", "1"])
+        store.track_version(spark, "go", "iri-1", "v1")
+        store.track_version(spark, "go", "iri-2", "v2")
+    assert jobs == []
+    assert store.lineage.latest().row_count == 5
+    row = store.read_tracking(spark).first()
+    assert (row["current_version"], [tuple(a) for a in row["archive"]]) == (
+        "v2", [("iri-1", "v1")]
+    )
+    with _jobs_in_group(spark) as jobs:  # the probe does see jobs
+        spark.range(3).count()
+    assert jobs
+
+
+def test_run_pipeline_job_count(spark, onto, tmp_path):
+    from kg_obo_spark.datagen import generate_transcripts
+    from kg_obo_spark.plans.pipeline import run_pipeline
+
+    tr = generate_transcripts(spark, n_convs=120, seed=11, ontology=onto).cache()
+    tr.count()
+    with _jobs_in_group(spark) as jobs:
+        run_pipeline(spark, tr, onto, str(tmp_path / "kg"))
+    tr.unpersist()
+    # 34 jobs when lineage and tracking were Spark writes, the batch counts
+    # two count() jobs and the canonical map a count() plus a collect()
+    assert 0 < len(jobs) <= 20
+
+
+def test_arrow_and_spark_commits_read_back_equal(spark, tmp_path):
+    from datetime import datetime, timezone
+
+    from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA, TRACKING_SCHEMA, _arrow_rows
+
+    ts = datetime(2024, 5, 6, 7, 8, 9, 123456, tzinfo=timezone.utc)
+    cases = {
+        LINEAGE_SCHEMA: [("r1", "extract+link", 3, None, 42, 0, "snap", ts)],
+        TRACKING_SCHEMA: [("go", "iri-2", "v2", [{"iri": "iri-1", "version": "v1"}])],
+    }
+    for i, (ddl, rows) in enumerate(cases.items()):
+        a = Table(str(tmp_path / f"arrow{i}"))
+        s = Table(str(tmp_path / f"spark{i}"))
+        snap_a = a.commit(_arrow_rows(rows, ddl))
+        snap_s = s.commit(spark.createDataFrame(rows, ddl))
+        assert snap_a.meta["schema"] == snap_s.meta["schema"]
+        assert snap_a.row_count == snap_s.row_count == 1
+        got_a, got_s = a.read(spark), s.read(spark)
+        assert got_a.schema.simpleString() == got_s.schema.simpleString()
+        assert got_a.collect() == got_s.collect()
+
+
+def test_arrow_append_onto_spark_snapshot(spark, tmp_path):
+    """Tables written by Spark (as earlier versions did) take Arrow appends
+    without a schema merge, and their tracking rows rotate as before."""
+    from datetime import datetime, timezone
+
+    from kg_obo_spark.plans.tracking import LINEAGE_SCHEMA, TRACKING_SCHEMA
+
+    store = TrackingStore(str(tmp_path))
+    ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    store.lineage.commit(
+        spark.createDataFrame([("r0", "unit_done", -1, 0, 0, 0, "0", ts)], LINEAGE_SCHEMA),
+        mode="append",
+    )
+    store.log_stage(spark, "r1", "co_edges", 5, 7)
+    head = store.lineage.latest()
+    assert "merged_schema" not in head.meta
+    assert head.row_count == 2
+    assert sorted(r["stage"] for r in store.lineage.read(spark).collect()) == [
+        "co_edges", "unit_done"
+    ]
+    store.tracking.commit(
+        spark.createDataFrame([("bfo", "iri-v1", "v1", [])], TRACKING_SCHEMA)
+    )
+    store.track_version(spark, "bfo", "iri-v2", "v2")
+    row = store.read_tracking(spark).first()
+    assert row["current_version"] == "v2"
+    assert [(a["iri"], a["version"]) for a in row["archive"]] == [("iri-v1", "v1")]
+
+
+def test_arrow_commit_takes_plain_writes_only(tmp_path):
+    import pyarrow as pa
+
+    t = Table(str(tmp_path / "t"))
+    rows = pa.table({"b": [1, 2]})
+    with pytest.raises(ValueError):
+        t.commit(rows, partition_by=["b"])
+    with pytest.raises(ValueError):
+        t.commit(rows, write_options={"compression": "zstd"})
+    assert not t.exists()
